@@ -267,12 +267,6 @@ def _footer_rows_at(path: str, mtime: float) -> int | None:
         return None
 
 
-def _footer_rows(path: str) -> int | None:
-    """Total row count from parquet footer metadata (file or dir;
-    recursive, mtime-keyed so appends invalidate the memo)."""
-    return _footer_rows_at(path, _tree_mtime(path))
-
-
 @lru_cache(maxsize=256)
 def _few_splits_at(path: str, mtime: float) -> bool:
     del mtime  # cache-key component only
@@ -285,13 +279,6 @@ def _few_splits_at(path: str, mtime: float) -> bool:
         return len(files) < 8
     except Exception:  # pragma: no cover - remote/odd layouts: assume fine
         return False
-
-
-def _few_splits(path: str) -> bool:
-    """True if the parquet path can't parallelize a scan (fewer than 8
-    row groups / files). Checked from file metadata (milliseconds,
-    mtime-keyed cache) — never by resolving the Spark plan."""
-    return _few_splits_at(path, _tree_mtime(path))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -1188,7 +1188,7 @@ def _cc_materialize(pairs: DataFrame, _save):
     exact row count (guide §1.2: don't recompute). Used by the
     gate-disabled star path only since r17 — the gated path derives
     these lazily on refusal (see connected_components)."""
-    base = _save(pairs.select("doc_a", "doc_b"))
+    base = _save(pairs)
     edges = _save(
         base.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
         .filter(F.col("a") != F.col("b"))
@@ -1511,6 +1511,11 @@ def connected_components(
         local_max_edges = int(
             _os.environ.get("SPARK_GRAFT_CC_LOCAL_MAX_EDGES", "100000")
         )
+    # A NULL doc id names no document: drop such pairs up front, so the
+    # driver union-find and both distributed algorithms see one graph
+    # (a (x, NULL) pair would otherwise reach _cc_local's sorted() and a
+    # (NULL, NULL) pair would come back as a null-labelled singleton).
+    pairs = pairs.select("doc_a", "doc_b").dropna()
     base = None
     if local_max_edges:
         # Checkpoint the raw pair projection once; the gate's single
@@ -1519,7 +1524,7 @@ def connected_components(
         # actions (checkpoint + collect). Only the refusal path — a
         # graph over the bound, where distributed work dominates
         # anyway — re-derives the edge list for the star loop.
-        base = _save(pairs.select("doc_a", "doc_b"))
+        base = _save(pairs)
         # None = edges or self-pair singles overflowed the bound:
         # fall through to the distributed path, which handles both
         # without driver state

@@ -1236,19 +1236,6 @@ def embedding_dedup_clusters(
     )
 
 
-def ann_lsh_buckets(t: dict[str, DataFrame]) -> DataFrame:
-    """(vec_id, bucket) sign-bit LSH bucket assignment."""
-    planes = _hyperplanes()
-    emb = t["embeddings"]
-    bucket = None
-    for j, plane in enumerate(planes):
-        arr = F.array(*[F.lit(x) for x in plane])
-        bit = F.when(V.dot(arr, "embedding") > 0, F.lit(1)).otherwise(F.lit(0))
-        term = F.shiftleft(bit.cast("long"), j)
-        bucket = term if bucket is None else bucket + term
-    return emb.select("vec_id", "embedding", bucket.alias("bucket"))
-
-
 def ann_params(
     n: int, target_bucket: int = 16, n_tables: int = 8
 ) -> tuple[int, int]:

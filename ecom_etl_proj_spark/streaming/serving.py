@@ -15,11 +15,11 @@ back with hgetall / lrange / get (/root/reference/streamlit/utils.py:
   default; no external service required). Numeric increments
   accumulate ``decimal.Decimal`` exactly, so totals match the batch
   queries' DECIMAL(18,6) accumulation bit-for-bit.
-- ``RedisKVStore`` — optional redis-py binding behind the
-  ``SPARK_GRAFT_REDIS_URL`` env gate (same seam pattern as the Kafka
-  source): the identical op stream lands in a real Redis via a
-  MULTI/EXEC pipeline, so the reference's dashboard could read it
-  unchanged.
+- ``RedisKVStore`` — optional redis-py binding, reached through
+  ``connect_store("redis://...")`` (the Redis test runs when
+  ``SPARK_GRAFT_REDIS_URL`` names a server): the identical op stream
+  lands in a real Redis via a MULTI/EXEC pipeline, so the reference's
+  dashboard could read it unchanged.
 - ``serve_consumer_metrics`` — the foreachBatch sink that maintains
   the consumer's full key surface from the events stream.
 
@@ -215,16 +215,6 @@ class RedisKVStore(KVStore):
 
     def get(self, key: str):
         return self._r.get(key)
-
-
-def get_store() -> KVStore:
-    """The env-gated store factory: a real Redis when
-    ``$SPARK_GRAFT_REDIS_URL`` is set (and redis-py importable), else
-    a fresh embedded store."""
-    url = os.environ.get(REDIS_URL_ENV)
-    if url:
-        return RedisKVStore(url)
-    return EmbeddedKVStore()
 
 
 # --------------------------------------------------------------------------
@@ -921,8 +911,6 @@ def serve_consumer_metrics(
     legacy_checked: list[bool] = []
 
     def process_driver(batch_df: DataFrame, epoch: int) -> None:
-        if batch_df.isEmpty():
-            return
         ns = namespace()
         # One-time pre-r12 marker-namespace migration (r12 ADVICE #2):
         # only the FIRST epoch a run processes can be a restart replay,
@@ -952,8 +940,6 @@ def serve_consumer_metrics(
         )
 
     def process_executor(batch_df: DataFrame, epoch: int) -> None:
-        if batch_df.isEmpty():
-            return
         e = _prepared(batch_df)
         ns = namespace()
         # fixed-width hash repartitions pin partition membership
@@ -971,24 +957,29 @@ def serve_consumer_metrics(
         if scalar:
             drv_store.apply_batch(f"{ns}/drv", epoch, scalar)
 
-    def process_auto(batch_df: DataFrame, epoch: int) -> None:
-        # key-cardinality switch: 4 * rows bounds the batch's counter
-        # rows from above, so small batches (the dashboard tail) keep
-        # the one-atomic-op driver path and large ones push from the
-        # executors; deterministic in the batch content, so replays
-        # re-pick the same path and the markers hold
-        if batch_df.isEmpty():
-            return
-        big = store_url is not None and (
-            4 * batch_df.count() > auto_executor_keys
-        )
-        (process_executor if big else process_driver)(batch_df, epoch)
+    def process(batch_df: DataFrame, epoch: int) -> None:
+        # Every path reads the batch several times (emptiness, then one
+        # aggregate per key family); persisting it once makes the
+        # source scan run once per micro-batch instead of per read.
+        batch_df.persist()
+        try:
+            if batch_df.isEmpty():
+                return
+            # auto: key-cardinality switch — 4 * rows bounds the batch's
+            # counter rows from above, so small batches (the dashboard
+            # tail) keep the one-atomic-op driver path and large ones
+            # push from the executors; deterministic in the batch
+            # content, so replays re-pick the same path and the markers
+            # hold
+            big = mode == "executor" or (
+                mode == "auto"
+                and store_url is not None
+                and 4 * batch_df.count() > auto_executor_keys
+            )
+            (process_executor if big else process_driver)(batch_df, epoch)
+        finally:
+            batch_df.unpersist()
 
-    process = {
-        "driver": process_driver,
-        "executor": process_executor,
-        "auto": process_auto,
-    }[mode]
     return (
         events.writeStream.outputMode("append")
         .foreachBatch(process)

@@ -504,6 +504,30 @@ def test_connected_components_known_graph(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
 
 
+def test_connected_components_drops_null_doc_ids(spark):
+    """A pair with a NULL doc id names no document, as under SQL join
+    semantics: a (x, NULL) pair adds no node and no edge, and a
+    (NULL, NULL) pair adds no null-labelled singleton — on the driver
+    union-find path and on both distributed algorithms."""
+    from ecom_etl_proj_spark.operators import dedup
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, None), (None, 7), (None, None), (5, 5)],
+        "doc_a long, doc_b long",
+    )
+    want = {1: 1, 2: 1, 5: 5}
+    for kw in (
+        {},
+        {"local_max_edges": 0},
+        {"local_max_edges": 0, "algorithm": "label"},
+    ):
+        got = {
+            r["doc_id"]: r["component_id"]
+            for r in dedup.connected_components(pairs, **kw).collect()
+        }
+        assert got == want, kw
+
+
 def test_connected_components_reliable_checkpoint(spark, tmp_path):
     """With checkpoint_dir set, round state goes through reliable
     checkpoint(): same labels, and checkpoint files actually land in

@@ -1893,6 +1893,35 @@ def test_serving_sink_crash_replay_exactly_once(spark, tables):
     ) == batch["orders"]["total_value"]
 
 
+def test_serving_sink_reads_each_batch_once(spark, tables):
+    """The sink reads every micro-batch several times (emptiness, then
+    one aggregate per key family) but scans its source once: over a
+    one-file-per-trigger drain the progress reports as many input rows
+    as there are events, and the drain leaves no persisted RDD behind."""
+    events = tables["events"].filter(F.col("event_id") % 5 == 0)
+    n = events.count()
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    store = serving.EmbeddedKVStore()
+    with tempfile.TemporaryDirectory(prefix="serving_once_") as d:
+        src, ckpt = f"{d}/src", f"{d}/ckpt"
+        events.repartition(3).write.parquet(src)
+        before = set(persistent().keys())
+        stream = (
+            spark.readStream.schema(events.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        q = serving.serve_consumer_metrics(stream, store, ckpt)
+        q.awaitTermination(180)
+        assert q.exception() is None
+        after = set(persistent().keys())
+    batches = [p for p in q.recentProgress if p.numInputRows > 0]
+    assert len(batches) == 3
+    assert sum(p.numInputRows for p in batches) == n
+    assert after - before == set()
+    assert store.hgetall("metrics:totals")
+
+
 def test_serving_legacy_marker_namespace_migration(spark, tables):
     """Upgrade continuity (r12 ADVICE #2): a pre-r12 deployment wrote
     applied-epoch markers under the plain sink_id; with the documented
